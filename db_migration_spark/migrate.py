@@ -88,14 +88,7 @@ class MigrationJob:
         the store layout (range-partitioned by tx, sorted within)."""
         out = self._path("datoms")
         records = parse_ace_dump(self.spark, self.dumps_path)
-        datoms = ace_records_to_datoms(records)
-        schema_rows = self.spark.read.parquet(self._path("schema")).collect()
-        vtypes = {
-            f"{r['class']}/{r['attribute']}": r["value_type"]
-            for r in schema_rows
-            if r["value_type"] in ("long", "double", "date", "timestamp")
-        }
-        typed = typed_cast(datoms, vtypes) if vtypes else datoms
+        typed = self._typed(ace_records_to_datoms(records), self._schema_rows())
         # Store layout for scale: hive-partitioned by class (per-class QA
         # counts, homology splits and per-class pivots prune to their
         # directories), range-clustered so each class's files cover
@@ -124,30 +117,39 @@ class MigrationJob:
         if not self.patches_path:
             base.write.mode("overwrite").parquet(out)
             return out
-        patches = ace_records_to_datoms(
-            parse_ace_dump(self.spark, self.patches_path)
+        schema_rows = self._schema_rows()
+        # typed exactly like the base import, so a patched typed value
+        # keeps its v_long/v_double/v_date column
+        patches = self._typed(
+            ace_records_to_datoms(parse_ace_dump(self.spark, self.patches_path)),
+            schema_rows,
         )
-        for c in base.columns:
-            if c not in patches.columns:
-                patches = patches.withColumn(c, F.lit(None).cast(dict(base.dtypes)[c]))
         merged = apply_patches(
             base,
             patches.select(*base.columns),
-            card_many_attrs=self._card_many_attrs(),
+            card_many_attrs=[
+                f"{r['class']}/{r['attribute']}"
+                for r in schema_rows
+                if r["cardinality"] == "many"
+            ],
         )
         merged.write.mode("overwrite").partitionBy("class").parquet(out)
         return out
 
-    def _card_many_attrs(self) -> list[str]:
-        """Card-many attribute names ('Class/attr') from the installed
-        schema (X2).  Schema is O(#attributes) metadata — a collect here is
-        the same driver-side read typed_cast does."""
-        schema_rows = self.spark.read.parquet(self._path("schema")).collect()
-        return [
-            f"{r['class']}/{r['attribute']}"
+    def _schema_rows(self) -> list:
+        """The installed schema (X2): O(#attributes) metadata, small
+        enough to collect."""
+        return self.spark.read.parquet(self._path("schema")).collect()
+
+    @staticmethod
+    def _typed(datoms: DataFrame, schema_rows: list) -> DataFrame:
+        """X3: the typed value columns the schema declares."""
+        vtypes = {
+            f"{r['class']}/{r['attribute']}": r["value_type"]
             for r in schema_rows
-            if r["cardinality"] == "many"
-        ]
+            if r["value_type"] in ("long", "double", "date", "timestamp")
+        }
+        return typed_cast(datoms, vtypes) if vtypes else datoms
 
     def homol_split(self, ctx: dict) -> str:
         """X5: second store for homology classes (the '<release>-homol' DB,

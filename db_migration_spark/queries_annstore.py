@@ -85,6 +85,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .queries_shared import build_once, drain
 from .operators.similarity import (
     NSW_H,
     NSW_M,
@@ -108,32 +109,29 @@ def ensure_nsw_graph_store(spark: SparkSession, sf_dir: str):
     table, OPTIMIZE-clustered on ``src`` (each file group owns a
     contiguous node range → min/max zone maps make any frontier's
     groups plannable without I/O).  Priming discipline (r7 verdict
-    task 7): behind a ``_BUILD_DONE`` marker so sweeps and bench time
-    SERVING, never construction."""
+    task 7): built once (queries_shared.build_once) so sweeps and bench
+    time SERVING, never construction."""
     from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_nsw_graph")
-    done = os.path.join(root, "_BUILD_DONE")
     edges_root = os.path.join(root, "edges")
-    if os.path.exists(done):
-        return TxTable(edges_root)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    edges = (
-        nsw_build_edges_descent(emb)
-        .unionByName(nsw_longrange_edges(emb))
-        .dropDuplicates(["src", "dst"])
-    )
-    t = TxTable(edges_root)
-    t.commit_append(edges)
-    t.optimize(spark, sort_key=["src"], target_groups=8)
-    with open(done, "w"):
-        pass
-    return t
+
+    def build() -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        edges = (
+            nsw_build_edges_descent(emb)
+            .unionByName(nsw_longrange_edges(emb))
+            .dropDuplicates(["src", "dst"])
+        )
+        t = TxTable(edges_root)
+        t.commit_append(edges)
+        t.optimize(spark, sort_key=["src"], target_groups=8)
+
+    build_once(root, build)
+    return TxTable(edges_root)
 
 
 def ensure_nsw_exact_edges(spark: SparkSession, sf_dir: str) -> dict:
@@ -148,25 +146,22 @@ def ensure_nsw_exact_edges(spark: SparkSession, sf_dir: str) -> dict:
     from .queries_round4 import _HNSW_M1, _HNSW_STRIDE
 
     root = _fx(sf_dir, "nsw_exact_edges")
-    done = os.path.join(root, "_BUILD_DONE")
     paths = {
         "l0": os.path.join(root, "l0.parquet"),
         "l1": os.path.join(root, "l1.parquet"),
     }
-    if os.path.exists(done):
-        return paths
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    nsw_build_edges(emb).write.mode("overwrite").parquet(paths["l0"])
-    l1 = emb.filter(F.col("vec_id") % _HNSW_STRIDE == 0)
-    nsw_build_edges(l1, m=_HNSW_M1).write.mode("overwrite").parquet(
-        paths["l1"]
-    )
-    with open(done, "w"):
-        pass
+
+    def build() -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        nsw_build_edges(emb).write.mode("overwrite").parquet(paths["l0"])
+        l1 = emb.filter(F.col("vec_id") % _HNSW_STRIDE == 0)
+        nsw_build_edges(l1, m=_HNSW_M1).write.mode("overwrite").parquet(
+            paths["l1"]
+        )
+
+    build_once(root, build)
     return paths
 
 
@@ -296,6 +291,26 @@ def q_ann_nsw_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_SLICES = 4
 
 
+def _slice_stream(spark: SparkSession, emb: DataFrame, root: str) -> DataFrame:
+    """A real multi-batch arrival: the corpus split into _N_SLICES
+    files under ``root/src`` and streamed one file per trigger."""
+    src_dir = os.path.join(root, "src")
+    os.makedirs(src_dir, exist_ok=True)
+    for i in range(_N_SLICES):
+        tmp = os.path.join(root, f"_tmp{i}")
+        emb.filter(F.col("vec_id") % _N_SLICES == i).coalesce(
+            1
+        ).write.mode("overwrite").parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        os.rename(part, os.path.join(src_dir, f"slice_{i}.parquet"))
+        shutil.rmtree(tmp)
+    return (
+        spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+
+
 def _ensure_stream_nsw_mv(spark: SparkSession, sf_dir: str):
     """Incremental kNN-graph maintenance under streaming vector
     appends.  State: a vectors table V (append-only) and the directed
@@ -313,125 +328,101 @@ def _ensure_stream_nsw_mv(spark: SparkSession, sf_dir: str):
     a replayed batch txn-skips the fold and only ever re-appends its
     own vectors once.  After the drain the stored graph is gated
     edge-for-edge against the one-shot batch build, and batch 0 is
-    adversarially replayed (both tables must version-no-op); any
-    failure rmtrees the fixture before raising."""
+    adversarially replayed (both tables must version-no-op); a failed
+    check raises and build_once removes the fixture."""
     from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_nsw_mv")
-    done = os.path.join(root, "_BUILD_DONE")
     vec_root = os.path.join(root, "vectors")
     knn_root = os.path.join(root, "knn")
-    if os.path.exists(done):
-        return TxTable(knn_root)
-    shutil.rmtree(root, ignore_errors=True)
-    src_dir = os.path.join(root, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    # a real multi-batch arrival: the corpus split into _N_SLICES files,
-    # streamed one file per trigger
-    for i in range(_N_SLICES):
-        tmp = os.path.join(root, f"_tmp{i}")
-        emb.filter(F.col("vec_id") % _N_SLICES == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src_dir, f"slice_{i}.parquet"))
-        shutil.rmtree(tmp)
 
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        b = bdf.select("vec_id", "embedding")
-        sp = bdf.sparkSession
-        vt = TxTable(vec_root)
-        prev = vt.read(sp) if vt.latest_version() >= 0 else None
-        allv = b if prev is None else prev.unionByName(b)
-        b_src = b.select(F.col("vec_id").alias("src"))
-        pairs = b_src.crossJoin(
-            allv.select(F.col("vec_id").alias("dst"))
+    def build() -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
         )
-        if prev is not None:
-            pairs = pairs.unionByName(
-                prev.select(F.col("vec_id").alias("src")).crossJoin(
-                    b.select(F.col("vec_id").alias("dst"))
-                )
-            )
-        pairs = pairs.filter(F.col("src") != F.col("dst"))
-        scored = _score_pairs(allv, pairs)
-        kt = TxTable(knn_root)
-        w = Window.partitionBy("src").orderBy(F.desc("dot"), "dst")
-        if kt.latest_version() < 0:
-            first = (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= NSW_M)
-                .select("src", "dst", "dot")
-            )
-            kt.commit_append(first, txn=("nsw_knn", batch_id))
-        else:
-            # CDC delta instead of a table rewrite: recompute the per-src
-            # top-M over (old ∪ new candidates), then commit ONLY the
-            # edges that actually changed — inserts for pairs entering a
-            # top-M, deletes for pairs falling out.  Write cost ∝ changed
-            # edges (steady-state small), never the adjacency size.
-            old = kt.read(sp).select("src", "dst", "dot")
-            new = (
-                old.unionByName(scored)
-                .dropDuplicates(["src", "dst"])
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= NSW_M)
-                .select("src", "dst", "dot")
-                .localCheckpoint(eager=False)
-            )
-            changes = (
-                new.exceptAll(old)
-                .withColumn("op", F.lit("upsert"))
-                .unionByName(
-                    old.exceptAll(new).withColumn("op", F.lit("delete"))
-                )
-            )
-            kt.apply_cdc(sp, changes, ["src", "dst"], txn=("nsw_knn", batch_id))
-        vt.commit_append(b, txn=("nsw_vec", batch_id))
 
-    schema = emb.schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("nsw mv stream drain did not finish")
-    kt, vt = TxTable(knn_root), TxTable(vec_root)
-    # adversarial replay: batch 0's identity is already in both logs —
-    # a deterministic slice (slice_0's own rows), must version-no-op
-    before = (kt.latest_version(), vt.latest_version())
-    refresh(emb.filter(F.col("vec_id") % _N_SLICES == 0), 0)
-    if (kt.latest_version(), vt.latest_version()) != before:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            "replayed batch 0 must no-op both tables (txn dedup broke)"
+        def refresh(bdf: DataFrame, batch_id: int) -> None:
+            b = bdf.select("vec_id", "embedding")
+            sp = bdf.sparkSession
+            vt = TxTable(vec_root)
+            prev = vt.read(sp) if vt.latest_version() >= 0 else None
+            allv = b if prev is None else prev.unionByName(b)
+            b_src = b.select(F.col("vec_id").alias("src"))
+            pairs = b_src.crossJoin(
+                allv.select(F.col("vec_id").alias("dst"))
+            )
+            if prev is not None:
+                pairs = pairs.unionByName(
+                    prev.select(F.col("vec_id").alias("src")).crossJoin(
+                        b.select(F.col("vec_id").alias("dst"))
+                    )
+                )
+            pairs = pairs.filter(F.col("src") != F.col("dst"))
+            scored = _score_pairs(allv, pairs)
+            kt = TxTable(knn_root)
+            w = Window.partitionBy("src").orderBy(F.desc("dot"), "dst")
+            if kt.latest_version() < 0:
+                first = (
+                    scored.withColumn("rn", F.row_number().over(w))
+                    .filter(F.col("rn") <= NSW_M)
+                    .select("src", "dst", "dot")
+                )
+                kt.commit_append(first, txn=("nsw_knn", batch_id))
+            else:
+                # CDC delta instead of a table rewrite: recompute the per-src
+                # top-M over (old ∪ new candidates), then commit ONLY the
+                # edges that actually changed — inserts for pairs entering a
+                # top-M, deletes for pairs falling out.  Write cost ∝ changed
+                # edges (steady-state small), never the adjacency size.
+                old = kt.read(sp).select("src", "dst", "dot")
+                new = (
+                    old.unionByName(scored)
+                    .dropDuplicates(["src", "dst"])
+                    .withColumn("rn", F.row_number().over(w))
+                    .filter(F.col("rn") <= NSW_M)
+                    .select("src", "dst", "dot")
+                    .localCheckpoint(eager=False)
+                )
+                changes = (
+                    new.exceptAll(old)
+                    .withColumn("op", F.lit("upsert"))
+                    .unionByName(
+                        old.exceptAll(new).withColumn("op", F.lit("delete"))
+                    )
+                )
+                kt.apply_cdc(sp, changes, ["src", "dst"], txn=("nsw_knn", batch_id))
+            vt.commit_append(b, txn=("nsw_vec", batch_id))
+
+        drain(
+            _slice_stream(spark, emb, root)
+            .writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", os.path.join(root, "_chk")),
+            600,
         )
-    # the exactness proof: incremental fold == one-shot batch build,
-    # edge for edge (directed, pre-symmetrize)
-    stored = kt.read(spark).select("src", "dst")
-    batch = nsw_build_edges(emb)  # symmetrized exact top-M
-    sym = _symmetrize(stored)
-    extra = sym.exceptAll(batch).count()
-    missing = batch.exceptAll(sym).count()
-    if extra or missing:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            f"streamed graph != batch build: +{extra} -{missing} edges"
-        )
-    with open(done, "w"):
-        pass
-    return kt
+        kt, vt = TxTable(knn_root), TxTable(vec_root)
+        # adversarial replay: batch 0's identity is already in both logs —
+        # a deterministic slice (slice_0's own rows), must version-no-op
+        before = (kt.latest_version(), vt.latest_version())
+        refresh(emb.filter(F.col("vec_id") % _N_SLICES == 0), 0)
+        if (kt.latest_version(), vt.latest_version()) != before:
+            raise RuntimeError(
+                "replayed batch 0 must no-op both tables (txn dedup broke)"
+            )
+        # the exactness proof: incremental fold == one-shot batch build,
+        # edge for edge (directed, pre-symmetrize)
+        stored = kt.read(spark).select("src", "dst")
+        batch = nsw_build_edges(emb)  # symmetrized exact top-M
+        sym = _symmetrize(stored)
+        extra = sym.exceptAll(batch).count()
+        missing = batch.exceptAll(sym).count()
+        if extra or missing:
+            raise RuntimeError(
+                f"streamed graph != batch build: +{extra} -{missing} edges"
+            )
+
+    build_once(root, build)
+    return TxTable(knn_root)
 
 
 def q_stream_nsw_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1630,26 +1621,9 @@ def _ensure_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str):
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_nsw_descent_mv")
-    done = os.path.join(root, "_BUILD_DONE")
     vec_root = os.path.join(root, "vectors")
     knn_root = os.path.join(root, "knn")
     stats_path = os.path.join(root, "maintenance_stats.jsonl")
-    if os.path.exists(done):
-        return TxTable(knn_root), stats_path
-    shutil.rmtree(root, ignore_errors=True)
-    src_dir = os.path.join(root, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    for i in range(_N_SLICES):
-        tmp = os.path.join(root, f"_tmp{i}")
-        emb.filter(F.col("vec_id") % _N_SLICES == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src_dir, f"slice_{i}.parquet"))
-        shutil.rmtree(tmp)
 
     def refresh(bdf: DataFrame, batch_id: int) -> None:
         descent_mv_refresh(
@@ -1661,44 +1635,39 @@ def _ensure_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str):
             batch_id,
         )
 
-    schema = emb.schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("nsw descent mv stream drain did not finish")
-    kt, vt = TxTable(knn_root), TxTable(vec_root)
-    before = (kt.latest_version(), vt.latest_version())
-    refresh(emb.filter(F.col("vec_id") % _N_SLICES == 0), 0)
-    if (kt.latest_version(), vt.latest_version()) != before:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            "replayed batch 0 must no-op both tables (txn dedup broke)"
+    def build() -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
         )
-    # post-drain repair round: heal the staleness touch-only folds
-    # leave behind (linear in |V| — the compaction-analog schedule)
-    descent_mv_repair(spark, vec_root, knn_root, stats_path)
-    # compaction-analog OPTIMIZE on the same schedule as the repair:
-    # per-batch CDC deltas leave the store interleaved across small
-    # file groups, which blunts the point plans the pruned
-    # maintenance/serve beams rely on.  Round 11: the rewrite clusters
-    # by the SEMANTIC key (IVF list id) + bloom sidecars, so frontier
-    # plans stay tight on id-scattered corpora too.  Pure rewrite —
-    # row content unchanged.
-    descent_mv_recluster(
-        spark, vec_root, knn_root, os.path.join(root, "lr")
-    )
-    with open(done, "w"):
-        pass
-    return kt, stats_path
+        drain(
+            _slice_stream(spark, emb, root)
+            .writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", os.path.join(root, "_chk")),
+            600,
+        )
+        kt, vt = TxTable(knn_root), TxTable(vec_root)
+        before = (kt.latest_version(), vt.latest_version())
+        refresh(emb.filter(F.col("vec_id") % _N_SLICES == 0), 0)
+        if (kt.latest_version(), vt.latest_version()) != before:
+            raise RuntimeError(
+                "replayed batch 0 must no-op both tables (txn dedup broke)"
+            )
+        # post-drain repair round: heal the staleness touch-only folds
+        # leave behind (linear in |V| — the compaction-analog schedule)
+        descent_mv_repair(spark, vec_root, knn_root, stats_path)
+        # compaction-analog OPTIMIZE on the same schedule as the repair:
+        # per-batch CDC deltas leave the store interleaved across small
+        # file groups, which blunts the point plans the pruned
+        # maintenance/serve beams rely on.  Round 11: the rewrite clusters
+        # by the SEMANTIC key (IVF list id) + bloom sidecars, so frontier
+        # plans stay tight on id-scattered corpora too.  Pure rewrite —
+        # row content unchanged.
+        descent_mv_recluster(
+            spark, vec_root, knn_root, os.path.join(root, "lr")
+        )
+
+    build_once(root, build)
+    return TxTable(knn_root), stats_path
 
 
 def _descent_mv_bounded(stats_path: str) -> bool:
@@ -1874,41 +1843,38 @@ def _ensure_ivfpq_store(spark: SparkSession, sf_dir: str):
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_ivfpq_store")
-    done = os.path.join(root, "_BUILD_DONE")
     store_root = os.path.join(root, "codes")
     books_path = os.path.join(root, "codebooks.parquet")
-    if os.path.exists(done):
-        return TxTable(store_root), books_path
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    books = similarity.pq_refine_codebooks(
-        emb,
-        similarity.pq_codebooks(
-            emb, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES
-        ),
-        n_sub=_IVFPQ_SUB,
-        iterations=_IVFPQ_REFINE_ITERS,
-    )
-    books.coalesce(1).write.mode("overwrite").parquet(books_path)
-    books = spark.read.parquet(books_path)
-    cents = similarity.deterministic_centroids(emb, _IVFPQ_LISTS)
-    assigned = similarity.ivf_assign(emb, cents).select(
-        "vec_id", "list_id"
-    )
-    codes = similarity.pq_encode(emb, books, n_sub=_IVFPQ_SUB).join(
-        assigned, "vec_id"
-    )
-    t = TxTable(store_root)
-    t.commit_append_partitioned(
-        codes.select("list_id", "vec_id", "codes"), "list_id"
-    )
-    _assert_gate_probe_union(spark, root, emb, cents)
-    with open(done, "w"):
-        pass
-    return t, books_path
+
+    def build() -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        books = similarity.pq_refine_codebooks(
+            emb,
+            similarity.pq_codebooks(
+                emb, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES
+            ),
+            n_sub=_IVFPQ_SUB,
+            iterations=_IVFPQ_REFINE_ITERS,
+        )
+        books.coalesce(1).write.mode("overwrite").parquet(books_path)
+        books = spark.read.parquet(books_path)
+        cents = similarity.deterministic_centroids(emb, _IVFPQ_LISTS)
+        assigned = similarity.ivf_assign(emb, cents).select(
+            "vec_id", "list_id"
+        )
+        codes = similarity.pq_encode(emb, books, n_sub=_IVFPQ_SUB).join(
+            assigned, "vec_id"
+        )
+        t = TxTable(store_root)
+        t.commit_append_partitioned(
+            codes.select("list_id", "vec_id", "codes"), "list_id"
+        )
+        _assert_gate_probe_union(emb, cents)
+
+    build_once(root, build)
+    return TxTable(store_root), books_path
 
 
 def _ivfpq_q_probe(
@@ -1942,9 +1908,7 @@ def _ivfpq_q_probe(
     return q, q_probe
 
 
-def _assert_gate_probe_union(
-    spark: SparkSession, root: str, emb: DataFrame, cents: DataFrame
-) -> None:
+def _assert_gate_probe_union(emb: DataFrame, cents: DataFrame) -> None:
     """r9 ADVICE #3: the declared IVF-PQ gates carry a STRICT
     ``pruned`` boolean (0 < picked < total — the full-coverage escape
     was deliberately dropped).  Assert at store BUILD time that the
@@ -1959,7 +1923,6 @@ def _assert_gate_probe_union(
         .count()
     )
     if not 0 < union < _IVFPQ_LISTS:
-        shutil.rmtree(root, ignore_errors=True)
         raise RuntimeError(
             f"ivfpq gate workload probes {union}/{_IVFPQ_LISTS} lists — "
             "the strict pruned gate would read red; retune _IVFPQ_PROBES"
@@ -2129,105 +2092,83 @@ def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str):
     frozen quantizers, the streamed store equals a one-shot batch
     encode of the full corpus ROW-FOR-ROW — gated by two exceptAll
     passes after the drain; batch 0 is adversarially replayed (must
-    version-no-op); any failure rmtrees the fixture.  Returns
-    (code TxTable, codebooks path)."""
+    version-no-op); a failed check raises and build_once removes the
+    fixture.  Returns (code TxTable, codebooks path)."""
     from .operators import similarity
     from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_ivfpq_mv")
-    done = os.path.join(root, "_BUILD_DONE")
     store_root = os.path.join(root, "codes")
     books_path = os.path.join(root, "codebooks.parquet")
-    if os.path.exists(done):
-        return TxTable(store_root), books_path
-    shutil.rmtree(root, ignore_errors=True)
-    src_dir = os.path.join(root, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    boot = emb.filter(F.col("vec_id") % _N_SLICES == 0)
-    similarity.pq_refine_codebooks(
-        boot,
-        similarity.pq_codebooks(
-            boot, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES
-        ),
-        n_sub=_IVFPQ_SUB,
-        iterations=_IVFPQ_REFINE_ITERS,
-    ).coalesce(1).write.mode("overwrite").parquet(books_path)
-    books = spark.read.parquet(books_path)
-    cents = similarity.deterministic_centroids(boot, _IVFPQ_LISTS)
-    cents_path = os.path.join(root, "centroids.parquet")
-    cents.coalesce(1).write.mode("overwrite").parquet(cents_path)
-    for i in range(_N_SLICES):
-        tmp = os.path.join(root, f"_tmp{i}")
-        emb.filter(F.col("vec_id") % _N_SLICES == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src_dir, f"slice_{i}.parquet"))
-        shutil.rmtree(tmp)
 
-    def encode(b: DataFrame) -> DataFrame:
-        sp = b.sparkSession
-        bks = sp.read.parquet(books_path)
-        cts = sp.read.parquet(cents_path)
-        assigned = similarity.ivf_assign(b, cts).select(
-            "vec_id", "list_id"
+    def build() -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
         )
-        return (
-            similarity.pq_encode(b, bks, n_sub=_IVFPQ_SUB)
-            .join(assigned, "vec_id")
-            .select("list_id", "vec_id", "codes")
-        )
+        boot = emb.filter(F.col("vec_id") % _N_SLICES == 0)
+        similarity.pq_refine_codebooks(
+            boot,
+            similarity.pq_codebooks(
+                boot, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES
+            ),
+            n_sub=_IVFPQ_SUB,
+            iterations=_IVFPQ_REFINE_ITERS,
+        ).coalesce(1).write.mode("overwrite").parquet(books_path)
+        books = spark.read.parquet(books_path)
+        cents = similarity.deterministic_centroids(boot, _IVFPQ_LISTS)
+        cents_path = os.path.join(root, "centroids.parquet")
+        cents.coalesce(1).write.mode("overwrite").parquet(cents_path)
 
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        # partitioned append: each batch's rows land one file group PER
-        # INVERTED LIST (min==max zone maps), so the streamed store
-        # keeps the batch store's file-skipping property — a probe
-        # plans ~n_probe/n_lists of the groups at ANY batch count
-        TxTable(store_root).commit_append_partitioned(
-            encode(bdf.select("vec_id", "embedding")),
-            "list_id",
-            txn=("ivfpq_mv", batch_id),
-        )
+        def encode(b: DataFrame) -> DataFrame:
+            sp = b.sparkSession
+            bks = sp.read.parquet(books_path)
+            cts = sp.read.parquet(cents_path)
+            assigned = similarity.ivf_assign(b, cts).select(
+                "vec_id", "list_id"
+            )
+            return (
+                similarity.pq_encode(b, bks, n_sub=_IVFPQ_SUB)
+                .join(assigned, "vec_id")
+                .select("list_id", "vec_id", "codes")
+            )
 
-    schema = emb.schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("ivfpq mv stream drain did not finish")
-    t = TxTable(store_root)
-    before = t.latest_version()
-    refresh(emb.filter(F.col("vec_id") % _N_SLICES == 0), 0)
-    if t.latest_version() != before:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            "replayed batch 0 must no-op the code store (txn dedup broke)"
+        def refresh(bdf: DataFrame, batch_id: int) -> None:
+            # partitioned append: each batch's rows land one file group PER
+            # INVERTED LIST (min==max zone maps), so the streamed store
+            # keeps the batch store's file-skipping property — a probe
+            # plans ~n_probe/n_lists of the groups at ANY batch count
+            TxTable(store_root).commit_append_partitioned(
+                encode(bdf.select("vec_id", "embedding")),
+                "list_id",
+                txn=("ivfpq_mv", batch_id),
+            )
+
+        drain(
+            _slice_stream(spark, emb, root)
+            .writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", os.path.join(root, "_chk")),
+            600,
         )
-    stored = t.read(spark).select("list_id", "vec_id", "codes")
-    batch = encode(emb)
-    extra = stored.exceptAll(batch).count()
-    missing = batch.exceptAll(stored).count()
-    if extra or missing:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            f"streamed code store != batch encode: +{extra} -{missing}"
-        )
-    _assert_gate_probe_union(spark, root, emb, cents)
-    with open(done, "w"):
-        pass
-    return t, books_path
+        t = TxTable(store_root)
+        before = t.latest_version()
+        refresh(emb.filter(F.col("vec_id") % _N_SLICES == 0), 0)
+        if t.latest_version() != before:
+            raise RuntimeError(
+                "replayed batch 0 must no-op the code store (txn dedup broke)"
+            )
+        stored = t.read(spark).select("list_id", "vec_id", "codes")
+        batch = encode(emb)
+        extra = stored.exceptAll(batch).count()
+        missing = batch.exceptAll(stored).count()
+        if extra or missing:
+            raise RuntimeError(
+                f"streamed code store != batch encode: +{extra} -{missing}"
+            )
+        _assert_gate_probe_union(emb, cents)
+
+    build_once(root, build)
+    return TxTable(store_root), books_path
 
 
 def q_stream_ivfpq_mv(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -157,72 +157,23 @@ def _ensure_stream_dsir_mv(spark: SparkSession, sf_dir: str):
     100 TB the per-batch work is one conditional-sum aggregate over
     the batch plus a rewrite of a ≤256-row table; scored corpora never
     re-fit the distribution."""
-    import os
-    import shutil
-
     from .operators.corpus import dsir_bucket_stats, dsir_occurrences
-    from .plans.txlog import TxTable
     from .queries_dedupstore import _docs_stream
     from .queries_e2e import _fx
+    from .queries_shared import fold_mv
 
-    root = _fx(sf_dir, "txlog_stream_dsir_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    docs = _docs_stream(spark, sf_dir).select("doc_id", "lang", "text")
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        stats = dsir_bucket_stats(
-            dsir_occurrences(bdf), F.col("lang") == "en"
-        )
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return stats
-            return (
-                current.unionByName(stats)
-                .groupBy("b")
-                .agg(
-                    F.sum("rc").alias("rc"), F.sum("tc").alias("tc")
-                )
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("dsir_mv", batch_id))
-
-    q = (
-        docs.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    return fold_mv(
+        spark, _fx(sf_dir, "txlog_stream_dsir_mv"),
+        lambda: _docs_stream(spark, sf_dir).select("doc_id", "lang", "text"),
+        lambda df: dsir_bucket_stats(dsir_occurrences(df), F.col("lang") == "en"),
+        lambda df: df.groupBy("b").agg(
+            F.sum("rc").alias("rc"), F.sum("tc").alias("tc")
+        ),
+        "dsir_mv",
+        lambda: load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") < 50
+        ),
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("dsir mv stream drain did not finish")
-    before = t.latest_version()
-    # deterministic replay slice (limit() is an arbitrary subset) so a
-    # dedup regression corrupts reproducibly — and rmtree on failure so
-    # a failed gate never leaves a poisoned half-built fixture
-    replay = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 50
-    )
-
-    def clobber(current):
-        return dsir_bucket_stats(
-            dsir_occurrences(replay), F.col("lang") == "en"
-        )
-
-    t.merge(spark, clobber, txn=("dsir_mv", 0))
-    if t.latest_version() != before:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_dsir_mv(spark: SparkSession, sf_dir: str) -> DataFrame:

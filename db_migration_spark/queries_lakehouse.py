@@ -52,6 +52,7 @@ from .catalog import load_table
 from .operators.relational import zorder_key
 from .plans.txlog import TxTable
 from .queries_e2e import _fx
+from .queries_shared import build_once, drain
 
 _EPOCH = "1992-01-01"
 
@@ -67,31 +68,27 @@ def _ensure_zonemap_store(spark: SparkSession, sf_dir: str) -> TxTable:
     date-partitioned ingest naturally produces.  Rebuilt from scratch if
     a previous build died mid-way."""
     root = _fx(sf_dir, "txlog_zonemap_orders")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:  # partial build — start over
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.datediff(F.col("o_orderdate"), F.lit(_EPOCH).cast("date"))
-        .cast("int")
-        .alias("day"),
-        F.year("o_orderdate").alias("yr"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    years = sorted(
-        r.yr for r in orders.select("yr").distinct().collect()
-    )  # driver-tier: ≤7 rows
-    for y in years:
-        t.commit_append(orders.filter(F.col("yr") == y))
-    with open(done, "w"):
-        pass
-    return t
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.datediff(F.col("o_orderdate"), F.lit(_EPOCH).cast("date"))
+            .cast("int")
+            .alias("day"),
+            F.year("o_orderdate").alias("yr"),
+            F.col("o_orderpriority").alias("prio"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        years = sorted(
+            r.yr for r in orders.select("yr").distinct().collect()
+        )  # driver-tier: ≤7 rows
+        for y in years:
+            t.commit_append(orders.filter(F.col("yr") == y))
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,52 +155,46 @@ def _ensure_stream_txlog(spark: SparkSession, sf_dir: str) -> TxTable:
     from .queries_streaming import _events_stream
 
     root = _fx(sf_dir, "txlog_stream_events")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        TxTable(root).commit_append(bdf, txn=("events_sink", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:  # never mark a timed-out drain as built
-        q.stop()
-        raise RuntimeError("stream_txlog drain did not finish in 300s")
-    # adversarial replay: micro-batch 0 delivered AGAIN after a restart.
-    # The (app, batch) identity is already in the log → must be a no-op.
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .select(
+    def build() -> None:
+        t = TxTable(root)
+        events = _events_stream(spark, sf_dir).select(
             "event_id",
             "user_id",
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
         )
-        .limit(1000)
-    )
-    before = t.latest_version()
-    t.commit_append(replay, txn=("events_sink", 0))
-    assert t.latest_version() == before, "replayed batch must not commit"
-    with open(done, "w"):
-        pass
-    return t
+
+        def sink(bdf: DataFrame, batch_id: int) -> None:
+            TxTable(root).commit_append(bdf, txn=("events_sink", batch_id))
+
+        drain(
+            events.writeStream.foreachBatch(sink).option(
+                "checkpointLocation", os.path.join(root, "_chk")
+            ),
+            300,
+        )
+        # adversarial replay: micro-batch 0 delivered AGAIN after a restart.
+        # The (app, batch) identity is already in the log → must be a no-op.
+        replay = (
+            load_table(spark, sf_dir, "events")
+            .select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.floor(F.col("value") * 100 + F.lit(0.5))
+                .cast("long")
+                .alias("cents"),
+            )
+            .limit(1000)
+        )
+        before = t.latest_version()
+        t.commit_append(replay, txn=("events_sink", 0))
+        if t.latest_version() != before:
+            raise RuntimeError("replayed batch must not commit")
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,33 +238,29 @@ def _ensure_optimize_store(spark: SparkSession, sf_dir: str) -> tuple[TxTable, i
     domain — then OPTIMIZE Z-ORDER into 4 range-owned Morton-clustered
     groups.  Returns (table, pre_optimize_version)."""
     root = _fx(sf_dir, "txlog_optimize_lineitem")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t, 3
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("okey"),
-        F.datediff(F.col("l_shipdate"), F.lit(_EPOCH).cast("date"))
-        .cast("int")
-        .alias("day"),
-        (F.col("l_partkey") % 16).cast("int").alias("pbucket"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    for i in range(4):
-        t.commit_append(li.filter(F.col("okey") % 4 == i))
-    pre_v = t.latest_version()  # == 3
-    t.optimize(
-        spark,
-        sort_key=[zorder_key("day", "pbucket", bits=12)],
-        target_groups=4,
-    )
-    with open(done, "w"):
-        pass
-    return t, pre_v
+
+    def build() -> None:
+        t = TxTable(root)
+        li = load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("okey"),
+            F.datediff(F.col("l_shipdate"), F.lit(_EPOCH).cast("date"))
+            .cast("int")
+            .alias("day"),
+            (F.col("l_partkey") % 16).cast("int").alias("pbucket"),
+            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        for i in range(4):
+            t.commit_append(li.filter(F.col("okey") % 4 == i))
+        t.optimize(
+            spark,
+            sort_key=[zorder_key("day", "pbucket", bits=12)],
+            target_groups=4,
+        )
+
+    build_once(root, build)
+    return TxTable(root), 3  # v3: the last append before OPTIMIZE
 
 
 def q_txlog_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,20 +368,15 @@ def q_txlog_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re as _re
 
     name = "txlog_stream_" + _re.sub(r"[^A-Za-z0-9]", "_", sf_dir)
-    q = (
+    drain(
         spark.readStream.format("txlog")
         .option("path", t.root)
         .load()
         .writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        300,
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("txlog stream drain did not finish in 300s")
     return (
         spark.table(name)
         .groupBy("prio", "_commit_version")
@@ -435,31 +417,28 @@ def _ensure_dv_store(spark: SparkSession, sf_dir: str) -> TxTable:
     asserts the no-rewrite invariant (data-group set unchanged) so a
     regression to copy-on-write delete fails the build, not just perf."""
     root = _fx(sf_dir, "txlog_dv_orders_v1")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    for i in range(2):
-        t.commit_append(orders.filter(F.col("okey") % 2 == i))
-    pre_groups = set(t.active_groups())
-    t.delete_where(
-        spark,
-        (F.col("prio") == "1-URGENT") & (F.col("okey") % 10 < 3),
-    )
-    if set(t.active_groups()) != pre_groups:  # -O must not strip this
-        raise RuntimeError("DV delete must not rewrite or add data groups")
-    with open(done, "w"):
-        pass
-    return t
+
+    def build() -> None:
+        t = TxTable(root)
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("okey"),
+            F.col("o_orderpriority").alias("prio"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        for i in range(2):
+            t.commit_append(orders.filter(F.col("okey") % 2 == i))
+        pre_groups = set(t.active_groups())
+        t.delete_where(
+            spark,
+            (F.col("prio") == "1-URGENT") & (F.col("okey") % 10 < 3),
+        )
+        if set(t.active_groups()) != pre_groups:  # -O must not strip this
+            raise RuntimeError("DV delete must not rewrite or add data groups")
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,44 +516,41 @@ def _ensure_mor_store(spark: SparkSession, sf_dir: str) -> TxTable:
     merge-on-read commits: the builder asserts the two original data
     groups are STILL ACTIVE afterwards — neither DML rewrote a file."""
     root = _fx(sf_dir, "txlog_mor_orders_v1")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    for i in range(2):
-        t.commit_append(orders.filter(F.col("okey") % 2 == i))
-    base_groups = set(t.active_groups())
-    t.update_where(
-        spark, F.col("okey") % 13 == 0, {"cents": F.col("cents") + 7}
-    )
-    source = (
-        orders.filter(F.col("okey") % 5 == 0)
-        .withColumn("cents", F.col("cents") + 1_000_000)
-        .unionByName(
-            orders.filter(F.col("okey") % 17 == 0).select(
-                (F.col("okey") + 100_000_000).alias("okey"),
-                "prio",
-                (F.col("cents") + 13).alias("cents"),
+
+    def build() -> None:
+        t = TxTable(root)
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("okey"),
+            F.col("o_orderpriority").alias("prio"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        for i in range(2):
+            t.commit_append(orders.filter(F.col("okey") % 2 == i))
+        base_groups = set(t.active_groups())
+        t.update_where(
+            spark, F.col("okey") % 13 == 0, {"cents": F.col("cents") + 7}
+        )
+        source = (
+            orders.filter(F.col("okey") % 5 == 0)
+            .withColumn("cents", F.col("cents") + 1_000_000)
+            .unionByName(
+                orders.filter(F.col("okey") % 17 == 0).select(
+                    (F.col("okey") + 100_000_000).alias("okey"),
+                    "prio",
+                    (F.col("cents") + 13).alias("cents"),
+                )
             )
         )
-    )
-    t.merge_into(spark, source, "okey")
-    if not base_groups <= set(t.active_groups()):  # -O must not strip
-        raise RuntimeError(
-            "merge-on-read DML must not rewrite or remove data groups"
-        )
-    with open(done, "w"):
-        pass
-    return t
+        t.merge_into(spark, source, "okey")
+        if not base_groups <= set(t.active_groups()):  # -O must not strip
+            raise RuntimeError(
+                "merge-on-read DML must not rewrite or remove data groups"
+            )
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,93 +650,86 @@ def _ensure_cdc_upsert_store(spark: SparkSession, sf_dir: str) -> TxTable:
     from .queries_streaming import _events_stream
 
     root = _fx(sf_dir, "txlog_cdc_upsert_v1")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
 
-    def lww(df: DataFrame) -> DataFrame:
-        """Last write per user on the collapsed shape — the key-unique
-        merge source."""
-        row = F.struct(
-            F.col("event_type").alias("et"),
-            F.col("cents").alias("cents"),
-            F.col("ts").alias("ts"),
-            F.col("event_id").alias("eid"),
-        )
-        okey = F.struct(F.col("ts"), F.col("event_id"))
-        return (
-            df.groupBy("user_id")
-            .agg(F.max_by(row, okey).alias("r"))
-            .select(
-                "user_id",
-                F.col("r.et").alias("event_type"),
-                F.col("r.cents").alias("cents"),
-                F.col("r.ts").alias("ts"),
-                F.col("r.eid").alias("eid"),
+    def build() -> None:
+        t = TxTable(root)
+
+        def lww(df: DataFrame) -> DataFrame:
+            """Last write per user on the collapsed shape — the key-unique
+            merge source."""
+            row = F.struct(
+                F.col("event_type").alias("et"),
+                F.col("cents").alias("cents"),
+                F.col("ts").alias("ts"),
+                F.col("event_id").alias("eid"),
             )
-            .withColumnRenamed("eid", "event_id")
-        )
-
-    def collapse(bdf: DataFrame) -> DataFrame:
-        return lww(
-            bdf.select(
-                "user_id",
-                "event_type",
-                F.floor(F.col("value") * 100 + F.lit(0.5))
-                .cast("long")
-                .alias("cents"),
-                "ts",
-                "event_id",
+            okey = F.struct(F.col("ts"), F.col("event_id"))
+            return (
+                df.groupBy("user_id")
+                .agg(F.max_by(row, okey).alias("r"))
+                .select(
+                    "user_id",
+                    F.col("r.et").alias("event_type"),
+                    F.col("r.cents").alias("cents"),
+                    F.col("r.ts").alias("ts"),
+                    F.col("r.eid").alias("eid"),
+                )
+                .withColumnRenamed("eid", "event_id")
             )
-        )
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        table = TxTable(root)
-        sp = bdf.sparkSession
-        latest = collapse(bdf)
-        if table.latest_version() < 0:
-            table.commit_append(latest, txn=("cdc_upsert", batch_id))
-            return
-        # CDC streams guarantee per-key order only within a batch; a
-        # later batch may carry an OLDER change for a key.  Upsert must
-        # therefore be last-write-wins against current state: fold the
-        # touched keys' existing rows into the source before the merge
-        # (one semi-join read of the touched keys, O(|batch|)).
-        cur = table.read(sp).join(
-            latest.select("user_id").distinct(), "user_id", "left_semi"
-        )
-        table.merge_into(
-            sp,
-            lww(latest.unionByName(cur)),
-            "user_id",
-            txn=("cdc_upsert", batch_id),
-        )
+        def collapse(bdf: DataFrame) -> DataFrame:
+            return lww(
+                bdf.select(
+                    "user_id",
+                    "event_type",
+                    F.floor(F.col("value") * 100 + F.lit(0.5))
+                    .cast("long")
+                    .alias("cents"),
+                    "ts",
+                    "event_id",
+                )
+            )
 
-    q = (
-        _events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("cdc upsert drain did not finish in 300s")
-    # adversarial replay of batch 0 (sink restart redelivery): the txn
-    # identity is already in the log → must not advance the version
-    before = t.latest_version()
-    if t.latest_version() < 0:
-        raise RuntimeError("drain committed nothing")
-    replay0 = collapse(load_table(spark, sf_dir, "events"))
-    t.merge_into(spark, replay0, "user_id", txn=("cdc_upsert", 0))
-    assert t.latest_version() == before, "replayed merge must be a no-op"
-    with open(done, "w"):
-        pass
-    return t
+        def sink(bdf: DataFrame, batch_id: int) -> None:
+            table = TxTable(root)
+            sp = bdf.sparkSession
+            latest = collapse(bdf)
+            if table.latest_version() < 0:
+                table.commit_append(latest, txn=("cdc_upsert", batch_id))
+                return
+            # CDC streams guarantee per-key order only within a batch; a
+            # later batch may carry an OLDER change for a key.  Upsert must
+            # therefore be last-write-wins against current state: fold the
+            # touched keys' existing rows into the source before the merge
+            # (one semi-join read of the touched keys, O(|batch|)).
+            cur = table.read(sp).join(
+                latest.select("user_id").distinct(), "user_id", "left_semi"
+            )
+            table.merge_into(
+                sp,
+                lww(latest.unionByName(cur)),
+                "user_id",
+                txn=("cdc_upsert", batch_id),
+            )
+
+        drain(
+            _events_stream(spark, sf_dir)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", os.path.join(root, "_chk")),
+            300,
+        )
+        # adversarial replay of batch 0 (sink restart redelivery): the txn
+        # identity is already in the log → must not advance the version
+        before = t.latest_version()
+        if t.latest_version() < 0:
+            raise RuntimeError("drain committed nothing")
+        replay0 = collapse(load_table(spark, sf_dir, "events"))
+        t.merge_into(spark, replay0, "user_id", txn=("cdc_upsert", 0))
+        if t.latest_version() != before:
+            raise RuntimeError("replayed merge must be a no-op")
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,36 +761,33 @@ def _ensure_cdc_feed_store(spark: SparkSession, sf_dir: str):
     for % 7 == 0 (absent from the base).  Deterministic from orders,
     so the change feed between v0 and v1 is SQL-recomputable."""
     root = _fx(sf_dir, "txlog_cdc_feed_v1")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    mod = F.col("o_orderkey") % 7
-    t.commit_append(base.filter(mod != 0))
-    changes = (
-        base.filter(mod == 1)
-        .withColumn("op", F.lit("delete"))
-        .unionByName(
-            base.filter(mod == 2)
-            .withColumn("cents", F.col("cents") * 2)
-            .withColumn("op", F.lit("upsert"))
+
+    def build() -> None:
+        t = TxTable(root)
+        base = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
         )
-        .unionByName(
-            base.filter(mod == 0).withColumn("op", F.lit("upsert"))
+        mod = F.col("o_orderkey") % 7
+        t.commit_append(base.filter(mod != 0))
+        changes = (
+            base.filter(mod == 1)
+            .withColumn("op", F.lit("delete"))
+            .unionByName(
+                base.filter(mod == 2)
+                .withColumn("cents", F.col("cents") * 2)
+                .withColumn("op", F.lit("upsert"))
+            )
+            .unionByName(
+                base.filter(mod == 0).withColumn("op", F.lit("upsert"))
+            )
         )
-    )
-    t.apply_cdc(spark, changes, "o_orderkey", txn=("cdc_feed", 1))
-    with open(done, "w"):
-        pass
-    return t
+        t.apply_cdc(spark, changes, "o_orderkey", txn=("cdc_feed", 1))
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -943,31 +909,29 @@ def _ensure_incremental_mv(
     second commit, again after the third, then adversarially re-refreshed
     at the same cursor (must be a version-stable no-op)."""
     root = _fx(sf_dir, "txlog_incr_mv_v1")
-    done = os.path.join(root, "_BUILD_DONE")
-    src = TxTable(os.path.join(root, "src"))
-    mv = TxTable(os.path.join(root, "mv"))
-    if os.path.exists(done):
-        return src, mv
-    shutil.rmtree(root, ignore_errors=True)
-    src, mv = TxTable(os.path.join(root, "src")), TxTable(
-        os.path.join(root, "mv")
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
-    src.commit_append(ev.filter(F.col("event_id") % 3 == 0))
-    src.commit_append(ev.filter(F.col("event_id") % 3 == 1))
-    _mv_refresh(spark, src, mv)          # view covers commits 0..1
-    src.commit_append(ev.filter(F.col("event_id") % 3 == 2))
-    _mv_refresh(spark, src, mv)          # + commit 2, delta-only
-    before = mv.latest_version()
-    _mv_refresh(spark, src, mv)          # replayed refresh: no-op
-    assert mv.latest_version() == before, "replayed refresh must not commit"
-    with open(done, "w"):
-        pass
-    return src, mv
+    src_root, mv_root = os.path.join(root, "src"), os.path.join(root, "mv")
+
+    def build() -> None:
+        src, mv = TxTable(src_root), TxTable(mv_root)
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        src.commit_append(ev.filter(F.col("event_id") % 3 == 0))
+        src.commit_append(ev.filter(F.col("event_id") % 3 == 1))
+        _mv_refresh(spark, src, mv)          # view covers commits 0..1
+        src.commit_append(ev.filter(F.col("event_id") % 3 == 2))
+        _mv_refresh(spark, src, mv)          # + commit 2, delta-only
+        before = mv.latest_version()
+        _mv_refresh(spark, src, mv)          # replayed refresh: no-op
+        if mv.latest_version() != before:
+            raise RuntimeError("replayed refresh must not commit")
+
+    build_once(root, build)
+    return TxTable(src_root), TxTable(mv_root)
 
 
 def q_txlog_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1003,24 +967,20 @@ def _ensure_partitioned_store(spark: SparkSession, sf_dir: str) -> TxTable:
     zone-map store's per-year commit loop, which pays a job per slice).
     Rebuilt from scratch if a previous build died mid-way."""
     root = _fx(sf_dir, "txlog_partitioned_orders")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("prio"),
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    t.commit_append_partitioned(orders, "prio")
-    with open(done, "w"):
-        pass
-    return t
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderpriority").alias("prio"),
+            F.col("o_orderstatus").alias("status"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        t.commit_append_partitioned(orders, "prio")
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,36 +1043,32 @@ def _ensure_constraint_store(spark: SparkSession, sf_dir: str) -> TxTable:
     from .plans.txlog import ConstraintViolation
 
     root = _fx(sf_dir, "txlog_check_constraint")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        "o_orderkey",
-    )
-    t.commit_append(orders.filter(F.col("o_orderkey") % 3 == 0))
-    t.add_constraint(spark, "cents_pos", "cents > 0")
-    second = orders.filter(F.col("o_orderkey") % 3 == 1)
-    v_before = t.latest_version()
-    try:
-        t.commit_append(second.withColumn("cents", -F.col("cents")))
-    except ConstraintViolation:
-        pass
-    else:
-        raise RuntimeError("violating append must be rejected")
-    if t.latest_version() != v_before:
-        raise RuntimeError("rejected append must not advance the log")
-    t.commit_append(second)
-    with open(done, "w"):
-        pass
-    return t
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderstatus").alias("status"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            "o_orderkey",
+        )
+        t.commit_append(orders.filter(F.col("o_orderkey") % 3 == 0))
+        t.add_constraint(spark, "cents_pos", "cents > 0")
+        second = orders.filter(F.col("o_orderkey") % 3 == 1)
+        v_before = t.latest_version()
+        try:
+            t.commit_append(second.withColumn("cents", -F.col("cents")))
+        except ConstraintViolation:
+            pass
+        else:
+            raise RuntimeError("violating append must be rejected")
+        if t.latest_version() != v_before:
+            raise RuntimeError("rejected append must not advance the log")
+        t.commit_append(second)
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,33 +1123,29 @@ def _ensure_restore_store(spark: SparkSession, sf_dir: str) -> TxTable:
     drop out of the live set but stay time-travelable), then a fourth
     append D.  Live = A∪B∪D; AS OF the pre-restore version = A∪B∪C."""
     root = _fx(sf_dir, "txlog_restore_checkpoint")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        "o_orderkey",
-    )
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderstatus").alias("status"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            "o_orderkey",
+        )
 
-    def part(i: int) -> DataFrame:
-        return orders.filter(F.col("o_orderkey") % 4 == i)
+        def part(i: int) -> DataFrame:
+            return orders.filter(F.col("o_orderkey") % 4 == i)
 
-    t.commit_append(part(0))  # v0: A
-    t.commit_append(part(1))  # v1: B
-    t.commit_append(part(2))  # v2: C
-    t.checkpoint()
-    t.restore(1)  # v3: metadata-only rollback to A∪B
-    t.commit_append(part(3))  # v4: D
-    with open(done, "w"):
-        pass
-    return t
+        t.commit_append(part(0))  # v0: A
+        t.commit_append(part(1))  # v1: B
+        t.commit_append(part(2))  # v2: C
+        t.checkpoint()
+        t.restore(1)  # v3: metadata-only rollback to A∪B
+        t.commit_append(part(3))  # v4: D
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_restore_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1309,30 +1261,26 @@ def _ensure_replace_where_store(spark: SparkSession, sf_dir: str) -> TxTable:
     replacement frame is derived from the pre-replace read, so the
     final state is a pure function of ``events``."""
     root = _fx(sf_dir, "txlog_replace_where_events")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.col("user_id").alias("uid"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
-            "cents"
-        ),
-    )
-    t.commit_append_partitioned(ev, "event_type")
-    clicks = t.read(spark).filter(F.col("event_type") == "click")
-    t.replace_where(
-        spark,
-        F.col("event_type") == "click",
-        clicks.withColumn("cents", F.col("cents") * 2),
-    )
-    with open(done, "w"):
-        pass
-    return t
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_type",
+            F.col("user_id").alias("uid"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
+                "cents"
+            ),
+        )
+        t.commit_append_partitioned(ev, "event_type")
+        clicks = t.read(spark).filter(F.col("event_type") == "click")
+        t.replace_where(
+            spark,
+            F.col("event_type") == "click",
+            clicks.withColumn("cents", F.col("cents") * 2),
+        )
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1383,52 +1331,46 @@ def _ensure_stream_partitioned(spark: SparkSession, sf_dir: str) -> TxTable:
     from .queries_streaming import _events_stream
 
     root = _fx(sf_dir, "txlog_stream_partitioned")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
-            "cents"
-        ),
-    )
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        TxTable(root).commit_append_partitioned(
-            bdf, "event_type", txn=("p_sink", batch_id)
-        )
-
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("partitioned stream drain did not finish")
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .select(
+    def build() -> None:
+        t = TxTable(root)
+        events = _events_stream(spark, sf_dir).select(
             "event_id",
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
+                "cents"
+            ),
         )
-        .limit(500)
-    )
-    before = t.latest_version()
-    t.commit_append_partitioned(replay, "event_type", txn=("p_sink", 0))
-    assert t.latest_version() == before, "replayed batch must not commit"
-    with open(done, "w"):
-        pass
-    return t
+
+        def sink(bdf: DataFrame, batch_id: int) -> None:
+            TxTable(root).commit_append_partitioned(
+                bdf, "event_type", txn=("p_sink", batch_id)
+            )
+
+        drain(
+            events.writeStream.foreachBatch(sink).option(
+                "checkpointLocation", os.path.join(root, "_chk")
+            ),
+            300,
+        )
+        replay = (
+            load_table(spark, sf_dir, "events")
+            .select(
+                "event_id",
+                "event_type",
+                F.floor(F.col("value") * 100 + F.lit(0.5))
+                .cast("long")
+                .alias("cents"),
+            )
+            .limit(500)
+        )
+        before = t.latest_version()
+        t.commit_append_partitioned(replay, "event_type", txn=("p_sink", 0))
+        if t.latest_version() != before:
+            raise RuntimeError("replayed batch must not commit")
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1484,26 +1426,22 @@ def _ensure_bloom_store(spark: SparkSession, sf_dir: str) -> TxTable:
     apart), then bloom sidecars built on event_id.  The layout where
     only a bloom index can skip files for a point lookup."""
     root = _fx(sf_dir, "txlog_bloom_events")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
-            "cents"
-        ),
-    )
-    for s in range(4):
-        t.commit_append(ev.filter(F.col("event_id") % 4 == s))
-    t.add_bloom_index(spark, "event_id")
-    with open(done, "w"):
-        pass
-    return t
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
+                "cents"
+            ),
+        )
+        for s in range(4):
+            t.commit_append(ev.filter(F.col("event_id") % 4 == s))
+        t.add_bloom_index(spark, "event_id")
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,27 +1515,23 @@ def _ensure_column_mapping_store(spark: SparkSession, sf_dir: str) -> TxTable:
     RENAME cents → amount_cents and DROP prio, both metadata-only
     commits over the same immutable data files."""
     root = _fx(sf_dir, "txlog_colmap_orders")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    t.commit_append(orders)                              # v0
-    t.alter_rename_column(spark, "cents", "amount_cents")  # v1 (metadata)
-    t.alter_drop_column(spark, "prio")                     # v2 (metadata)
-    with open(done, "w"):
-        pass
-    return t
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("key"),
+            F.col("o_orderstatus").alias("status"),
+            F.col("o_orderpriority").alias("prio"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        t.commit_append(orders)                              # v0
+        t.alter_rename_column(spark, "cents", "amount_cents")  # v1 (metadata)
+        t.alter_drop_column(spark, "prio")                     # v2 (metadata)
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1655,20 +1589,17 @@ def _ensure_ivf_store(spark: SparkSession, sf_dir: str) -> TxTable:
     from .operators import similarity
 
     root = _fx(sf_dir, "txlog_ivf_embeddings")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = similarity.deterministic_centroids(emb, 16)
-    t.commit_append_partitioned(
-        similarity.ivf_assign(emb, cents), "list_id"
-    )
-    with open(done, "w"):
-        pass
-    return t
+
+    def build() -> None:
+        t = TxTable(root)
+        emb = load_table(spark, sf_dir, "embeddings")
+        cents = similarity.deterministic_centroids(emb, 16)
+        t.commit_append_partitioned(
+            similarity.ivf_assign(emb, cents), "list_id"
+        )
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_ann_ivf_pruned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1794,30 +1725,26 @@ def _ensure_evolution_store(spark: SparkSession, sf_dir: str) -> TxTable:
     a predicate on either column prunes its own era's groups EXACTLY
     (min == max) and keeps the other era's conservatively."""
     root = _fx(sf_dir, "txlog_evolution_orders")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    if t.latest_version() >= 0:
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    t.commit_append_partitioned(
-        orders.filter(F.col("o_orderkey") % 2 == 0), "yr"
-    )
-    t.commit_append_partitioned(
-        orders.filter(F.col("o_orderkey") % 2 == 1), "prio"
-    )
-    with open(done, "w"):
-        pass
-    return t
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.year("o_orderdate").alias("yr"),
+            F.col("o_orderpriority").alias("prio"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        t.commit_append_partitioned(
+            orders.filter(F.col("o_orderkey") % 2 == 0), "yr"
+        )
+        t.commit_append_partitioned(
+            orders.filter(F.col("o_orderkey") % 2 == 1), "prio"
+        )
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_partition_evolution(
@@ -1926,47 +1853,45 @@ def _ensure_rtbf_store(spark: SparkSession, sf_dir: str):
     import json as _json
 
     root = _fx(sf_dir, "txlog_rtbf_orders")
-    done = os.path.join(root, "_BUILD_DONE")
     meta = os.path.join(root, "_META.json")
-    if os.path.exists(done):
-        with open(meta) as fh:
-            m = _json.load(fh)
-        return TxTable(root), m["subject"], m["deleted"], m["raises"]
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    subject = orders.agg(F.min("o_custkey")).collect()[0][0]
-    # two appends so the subject's rows span multiple file groups
-    t.commit_append(orders.filter(F.col("o_orderkey") % 2 == 0))
-    t.commit_append(orders.filter(F.col("o_orderkey") % 2 == 1))
-    pre_groups = set(t.active_groups())
-    t.delete_where(spark, f"o_custkey = {subject}")
-    t.optimize(spark, target_groups=2)  # rewrite reads THROUGH the DV
-    deleted = t.vacuum(retain_versions=0, min_age_seconds=0.0)
-    # the pre-erasure layout must be physically gone, not just masked
-    raises = False
-    try:
-        t.read(spark, 1).count()
-    except Exception:
-        raises = True
-    with open(meta, "w") as fh:
-        _json.dump(
-            {
-                "subject": int(subject),
-                "deleted": len(set(deleted) & pre_groups),
-                "raises": bool(raises),
-            },
-            fh,
+
+    def build() -> None:
+        t = TxTable(root)
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_custkey",
+            "o_orderkey",
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
         )
-    with open(done, "w"):
-        pass
-    return t, int(subject), len(set(deleted) & pre_groups), raises
+        subject = orders.agg(F.min("o_custkey")).collect()[0][0]
+        # two appends so the subject's rows span multiple file groups
+        t.commit_append(orders.filter(F.col("o_orderkey") % 2 == 0))
+        t.commit_append(orders.filter(F.col("o_orderkey") % 2 == 1))
+        pre_groups = set(t.active_groups())
+        t.delete_where(spark, f"o_custkey = {subject}")
+        t.optimize(spark, target_groups=2)  # rewrite reads THROUGH the DV
+        deleted = t.vacuum(retain_versions=0, min_age_seconds=0.0)
+        # the pre-erasure layout must be physically gone, not just masked
+        raises = False
+        try:
+            t.read(spark, 1).count()
+        except Exception:
+            raises = True
+        with open(meta, "w") as fh:
+            _json.dump(
+                {
+                    "subject": int(subject),
+                    "deleted": len(set(deleted) & pre_groups),
+                    "raises": bool(raises),
+                },
+                fh,
+            )
+
+    build_once(root, build)
+    with open(meta) as fh:
+        m = _json.load(fh)
+    return TxTable(root), m["subject"], m["deleted"], m["raises"]
 
 
 def q_txlog_rtbf_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2043,32 +1968,29 @@ def _ensure_clone_store(spark: SparkSession, sf_dir: str):
     foreign group no longer resolves)."""
     src = _ensure_zonemap_store(spark, sf_dir)
     root = _fx(sf_dir, "txlog_clone_orders")
-    done = os.path.join(root, "_BUILD_DONE")
-    if os.path.exists(done):
-        t = TxTable(root)
-        c0 = t._read_commit(0)
+    t = TxTable(root)
+    if t.latest_version() >= 0:
         try:
             stale = not all(
-                os.path.isdir(t._gpath(g)) for g in c0["add"]
+                os.path.isdir(t._gpath(g)) for g in t._read_commit(0)["add"]
             )
         except FileNotFoundError:
             stale = True  # _gpath now raises for missing-everywhere
-        if not stale:
-            return src, t
-        shutil.rmtree(root, ignore_errors=True)  # stale clone
-    elif os.path.isdir(root):
-        shutil.rmtree(root, ignore_errors=True)  # partial build
-    t = src.clone_shallow(root)
-    corrected = (
-        t.read(spark, 0)
-        .filter(F.col("prio") == "1-URGENT")
-        .withColumn("cents", F.col("cents") + F.lit(10))
-    )
-    t.delete_where(spark, "prio = '1-URGENT'")
-    t.commit_append(corrected)
-    with open(done, "w"):
-        pass
-    return src, t
+        if stale:
+            shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
+        t = src.clone_shallow(root)
+        corrected = (
+            t.read(spark, 0)
+            .filter(F.col("prio") == "1-URGENT")
+            .withColumn("cents", F.col("cents") + F.lit(10))
+        )
+        t.delete_where(spark, "prio = '1-URGENT'")
+        t.commit_append(corrected)
+
+    build_once(root, build)
+    return src, TxTable(root)
 
 
 def q_txlog_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2172,32 +2094,29 @@ def _ensure_catalog_txn(spark: SparkSession, sf_dir: str):
     from .plans.catalog_txn import TxCatalog
 
     root = _fx(sf_dir, "txlog_catalog")
-    done = os.path.join(root, "_BUILD_DONE")
-    cat = TxCatalog(root)
-    if os.path.exists(done):
-        return cat
-    shutil.rmtree(root, ignore_errors=True)
-    cat = TxCatalog(root)
-    od = _sliced_orders(spark, sf_dir)
-    fact, summ = cat.table("fact"), cat.table("summ")
 
-    def summarize(max_sl: int) -> DataFrame:
-        return _summarize_slices(od, max_sl)
+    def build() -> None:
+        cat = TxCatalog(root)
+        od = _sliced_orders(spark, sf_dir)
+        fact, summ = cat.table("fact"), cat.table("summ")
 
-    # txn 1: slice 0 into fact + its summary, one catalog publish
-    fv = fact.commit_append(od.filter(F.col("sl") == 0).drop("sl"))
-    sv = summ.commit_overwrite(summarize(0))
-    cat.commit({"fact": fv, "summ": sv})
-    # txn 2: slice 1 appended, summary rewritten, one catalog publish
-    fv = fact.commit_append(od.filter(F.col("sl") == 1).drop("sl"))
-    sv = summ.commit_overwrite(summarize(1))
-    cat.commit({"fact": fv, "summ": sv})
-    # in-flight: a table-level commit with NO catalog publish — catalog
-    # readers must never see it
-    fact.commit_append(od.filter(F.col("sl") == 2).drop("sl"))
-    with open(done, "w"):
-        pass
-    return cat
+        def summarize(max_sl: int) -> DataFrame:
+            return _summarize_slices(od, max_sl)
+
+        # txn 1: slice 0 into fact + its summary, one catalog publish
+        fv = fact.commit_append(od.filter(F.col("sl") == 0).drop("sl"))
+        sv = summ.commit_overwrite(summarize(0))
+        cat.commit({"fact": fv, "summ": sv})
+        # txn 2: slice 1 appended, summary rewritten, one catalog publish
+        fv = fact.commit_append(od.filter(F.col("sl") == 1).drop("sl"))
+        sv = summ.commit_overwrite(summarize(1))
+        cat.commit({"fact": fv, "summ": sv})
+        # in-flight: a table-level commit with NO catalog publish — catalog
+        # readers must never see it
+        fact.commit_append(od.filter(F.col("sl") == 2).drop("sl"))
+
+    build_once(root, build)
+    return TxCatalog(root)
 
 
 def q_txlog_catalog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2273,35 +2192,32 @@ def _ensure_catalog_branch(spark: SparkSession, sf_dir: str):
     from .plans.catalog_txn import TxCatalog
 
     root = _fx(sf_dir, "txlog_catalog_branch")
-    done = os.path.join(root, "_BUILD_DONE")
-    cat = TxCatalog(root)
-    if os.path.exists(done):
-        return cat
-    shutil.rmtree(root, ignore_errors=True)
-    cat = TxCatalog(root)
-    od = _sliced_orders(spark, sf_dir)
-    fact, summ = cat.table("fact"), cat.table("summ")
 
-    def summarize(max_sl: int) -> DataFrame:
-        return _summarize_slices(od, max_sl)
+    def build() -> None:
+        cat = TxCatalog(root)
+        od = _sliced_orders(spark, sf_dir)
+        fact, summ = cat.table("fact"), cat.table("summ")
 
-    fv = fact.commit_append(od.filter(F.col("sl") == 0).drop("sl"))
-    sv = summ.commit_overwrite(summarize(0))
-    cat.commit({"fact": fv, "summ": sv})
-    main_head_before = cat.latest_version()
-    dev = cat.create_branch("dev")
-    fv = fact.commit_append(od.filter(F.col("sl") == 1).drop("sl"))
-    sv = summ.commit_overwrite(summarize(1))
-    dev.commit({"fact": fv, "summ": sv})
-    # isolation, both directions, before the merge (not an assert: -O)
-    if cat.latest_version() != main_head_before:
-        raise RuntimeError("branch commit leaked into main")
-    if dev.snapshot()["fact"] != fv:
-        raise RuntimeError("branch head did not advance")
-    cat.merge_branch("dev")
-    with open(done, "w"):
-        pass
-    return cat
+        def summarize(max_sl: int) -> DataFrame:
+            return _summarize_slices(od, max_sl)
+
+        fv = fact.commit_append(od.filter(F.col("sl") == 0).drop("sl"))
+        sv = summ.commit_overwrite(summarize(0))
+        cat.commit({"fact": fv, "summ": sv})
+        main_head_before = cat.latest_version()
+        dev = cat.create_branch("dev")
+        fv = fact.commit_append(od.filter(F.col("sl") == 1).drop("sl"))
+        sv = summ.commit_overwrite(summarize(1))
+        dev.commit({"fact": fv, "summ": sv})
+        # isolation, both directions, before the merge (not an assert: -O)
+        if cat.latest_version() != main_head_before:
+            raise RuntimeError("branch commit leaked into main")
+        if dev.snapshot()["fact"] != fv:
+            raise RuntimeError("branch head did not advance")
+        cat.merge_branch("dev")
+
+    build_once(root, build)
+    return TxCatalog(root)
 
 
 def q_txlog_catalog_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2390,69 +2306,62 @@ def _ensure_stream_catalog(spark: SparkSession, sf_dir: str):
     from .queries_streaming import _events_stream
 
     root = _fx(sf_dir, "txlog_stream_catalog")
-    done = os.path.join(root, "_BUILD_DONE")
-    cat = TxCatalog(root)
-    if os.path.exists(done):
-        return cat
-    shutil.rmtree(root, ignore_errors=True)
-    cat = TxCatalog(root)
-    cents = F.floor(
-        F.col("value").cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("bigint")
-    events = _events_stream(spark, sf_dir).select(
-        F.col("event_type").alias("seg"), cents.alias("cents")
-    )
 
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        c = TxCatalog(root)
-        fact, summ = c.table("fact"), c.table("summ")
-        fv = fact.commit_append(bdf, txn=("cat_fact", batch_id))
-        # summary derives from the PINNED fact version, not the head —
-        # a concurrent in-flight append cannot leak into the pair
-        sm = (
-            fact.read(bdf.sparkSession, version=fv)
-            .groupBy("seg")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("cents").alias("total_c"),
+    def build() -> None:
+        cat = TxCatalog(root)
+        cents = F.floor(
+            F.col("value").cast("double") * F.lit(100.0) + F.lit(0.5)
+        ).cast("bigint")
+        events = _events_stream(spark, sf_dir).select(
+            F.col("event_type").alias("seg"), cents.alias("cents")
+        )
+
+        def refresh(bdf: DataFrame, batch_id: int) -> None:
+            c = TxCatalog(root)
+            fact, summ = c.table("fact"), c.table("summ")
+            fv = fact.commit_append(bdf, txn=("cat_fact", batch_id))
+            # summary derives from the PINNED fact version, not the head —
+            # a concurrent in-flight append cannot leak into the pair
+            sm = (
+                fact.read(bdf.sparkSession, version=fv)
+                .groupBy("seg")
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum("cents").alias("total_c"),
+                )
             )
-        )
-        sv = summ.commit_overwrite(sm, txn=("cat_summ", batch_id))
-        c.commit({"fact": fv, "summ": sv}, txn=("cat", batch_id))
+            sv = summ.commit_overwrite(sm, txn=("cat_summ", batch_id))
+            c.commit({"fact": fv, "summ": sv}, txn=("cat", batch_id))
 
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("catalog stream drain did not finish")
-    before = (
-        cat.table("fact").latest_version(),
-        cat.table("summ").latest_version(),
-        cat.latest_version(),
-    )
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .select(F.col("event_type").alias("seg"), cents.alias("cents"))
-        .limit(500)
-    )
-    refresh(replay, 0)
-    after = (
-        cat.table("fact").latest_version(),
-        cat.table("summ").latest_version(),
-        cat.latest_version(),
-    )
-    if after != before:  # not an assert: -O must not strip it
-        raise RuntimeError(
-            f"replayed batch must no-op all three logs ({before} -> {after})"
+        drain(
+            events.writeStream.foreachBatch(refresh).option(
+                "checkpointLocation", os.path.join(root, "_chk")
+            ),
+            300,
         )
-    with open(done, "w"):
-        pass
-    return cat
+        before = (
+            cat.table("fact").latest_version(),
+            cat.table("summ").latest_version(),
+            cat.latest_version(),
+        )
+        replay = (
+            load_table(spark, sf_dir, "events")
+            .select(F.col("event_type").alias("seg"), cents.alias("cents"))
+            .limit(500)
+        )
+        refresh(replay, 0)
+        after = (
+            cat.table("fact").latest_version(),
+            cat.table("summ").latest_version(),
+            cat.latest_version(),
+        )
+        if after != before:  # not an assert: -O must not strip it
+            raise RuntimeError(
+                f"replayed batch must no-op all three logs ({before} -> {after})"
+            )
+
+    build_once(root, build)
+    return TxCatalog(root)
 
 
 def q_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -232,17 +232,14 @@ def q_sql_ddl_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-attach with CREATE TABLE IF NOT EXISTS over the existing files
     (catalog metadata is session-scoped; the data is not).  The oracle
     recomputes the CTAS+INSERT union straight from ``orders``."""
-    import os
-    import shutil
-
     from .queries_e2e import _fx
+    from .queries_shared import build_once
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
     loc = _fx(sf_dir, "ddl_orders_rollup")
-    marker = os.path.join(loc, "_BUILD_DONE")
     spark.sql("DROP TABLE IF EXISTS ddl_rollup")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
+
+    def build() -> None:
         spark.sql(
             f"""
             CREATE TABLE ddl_rollup USING PARQUET LOCATION '{loc}' AS
@@ -259,13 +256,11 @@ def q_sql_ddl_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM orders_src WHERE o_orderkey % 3 <> 0
             """
         )
-        with open(marker, "w"):
-            pass
-    else:
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS ddl_rollup "
-            f"USING PARQUET LOCATION '{loc}'"
-        )
+
+    build_once(loc, build)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS ddl_rollup USING PARQUET LOCATION '{loc}'"
+    )
     return spark.sql(
         """
         SELECT prio, count(*) AS n_orders,
@@ -596,12 +591,11 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared read aggregates the whole table; only an overwrite that
     replaced exactly one partition matches the oracle."""
     import os
-    import shutil
 
     from .queries_e2e import _fx
+    from .queries_shared import build_once
 
     loc = _fx(sf_dir, "dyn_overwrite_orders")
-    marker = os.path.join(loc, "_BUILD_DONE")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderpriority").alias("prio"),
@@ -610,9 +604,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     data_dir = os.path.join(loc, "table")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        os.makedirs(loc, exist_ok=True)
+
+    def build() -> None:
         orders.write.partitionBy("prio").parquet(data_dir)
         urgent_bumped = orders.filter(
             F.col("prio") == "1-URGENT"
@@ -623,8 +616,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("prio")
             .parquet(data_dir)
         )
-        with open(marker, "w"):
-            pass
+
+    build_once(loc, build)
     return (
         spark.read.parquet(data_dir)
         .groupBy("prio")

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from .catalog import load_table
 from .functions import text as TXT
 from .functions import vectors as V
+from .queries_shared import build_once, drain
 
 K1 = 1.2
 B = 0.75
@@ -247,41 +248,37 @@ def _ensure_search_index(spark: SparkSession, sf_dir: str):
     corpus.  Returns (postings TxTable, consts path)."""
     import json as _json
     import os
-    import shutil
 
     from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "search_index")
-    done = os.path.join(root, "_BUILD_DONE")
     post_root = os.path.join(root, "postings")
     consts_path = os.path.join(root, "consts.json")
-    if os.path.exists(done):
-        return TxTable(post_root), consts_path
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    tf, dl, df_, consts = _term_stats(spark, sf_dir)
-    post = (
-        tf.join(dl, "doc_id")
-        .join(df_.select("term", "df"), "term")
-        .select("term", "doc_id", "tf", "dl", "df")
-    )
-    t = TxTable(post_root)
-    t.commit_append(post)
-    t.optimize(spark, sort_key=["term"], target_groups=8)
-    c = consts.collect()[0]
-    with open(consts_path, "w") as fh:
-        _json.dump(
-            {
-                "n_docs": c["n_docs"],
-                "avgdl": c["avgdl"],
-                "coll_len": c["coll_len"],
-            },
-            fh,
+
+    def build() -> None:
+        tf, dl, df_, consts = _term_stats(spark, sf_dir)
+        post = (
+            tf.join(dl, "doc_id")
+            .join(df_.select("term", "df"), "term")
+            .select("term", "doc_id", "tf", "dl", "df")
         )
-    with open(done, "w"):
-        pass
-    return t, consts_path
+        t = TxTable(post_root)
+        t.commit_append(post)
+        t.optimize(spark, sort_key=["term"], target_groups=8)
+        c = consts.collect()[0]
+        with open(consts_path, "w") as fh:
+            _json.dump(
+                {
+                    "n_docs": c["n_docs"],
+                    "avgdl": c["avgdl"],
+                    "coll_len": c["coll_len"],
+                },
+                fh,
+            )
+
+    build_once(root, build)
+    return TxTable(post_root), consts_path
 
 
 def q_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,20 +520,15 @@ def _ensure_stream_postings_mv(spark: SparkSession, sf_dir: str):
     term.  At 100 TB the per-batch cost is the batch's own tokenize +
     one ≤|vocab|-row and one 1-row fold."""
     import os
-    import shutil
 
     from .plans.txlog import TxTable
+    from .queries_dedupstore import _docs_stream
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_postings_mv")
-    done = os.path.join(root, "_BUILD_DONE")
     paths = {
         k: os.path.join(root, k) for k in ("postings", "stats", "consts")
     }
-    if os.path.exists(done):
-        return paths
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
 
     def refresh(bdf: DataFrame, batch_id: int) -> None:
         terms = bdf.select(
@@ -586,39 +578,31 @@ def _ensure_stream_postings_mv(spark: SparkSession, sf_dir: str):
             bdf.sparkSession, fold_consts, txn=("consts_mv", batch_id)
         )
 
-    from .queries_dedupstore import _docs_stream
-
-    q = (
-        _docs_stream(spark, sf_dir)
-        .select("doc_id", "text")
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("postings mv stream drain did not finish")
-    before = {k: TxTable(p).latest_version() for k, p in paths.items()}
-    # replay a DETERMINISTIC slice (limit() is an arbitrary subset):
-    # txn dedup must skip it, and if dedup ever regresses the damage
-    # is at least reproducible — and the rmtree below guarantees a
-    # failed gate never leaves a poisoned half-built fixture behind
-    refresh(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text"),
-        0,
-    )
-    after = {k: TxTable(p).latest_version() for k, p in paths.items()}
-    if before != after:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            f"replayed batch 0 must no-op all three tables: {before} {after}"
+    def build() -> None:
+        drain(
+            _docs_stream(spark, sf_dir)
+            .select("doc_id", "text")
+            .writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", os.path.join(root, "_chk")),
+            300,
         )
-    with open(done, "w"):
-        pass
+        before = {k: TxTable(p).latest_version() for k, p in paths.items()}
+        # replay a DETERMINISTIC slice (limit() is an arbitrary subset):
+        # txn dedup must skip it, and if dedup ever regresses the damage
+        # is at least reproducible
+        refresh(
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 50)
+            .select("doc_id", "text"),
+            0,
+        )
+        after = {k: TxTable(p).latest_version() for k, p in paths.items()}
+        if before != after:
+            raise RuntimeError(
+                f"replayed batch 0 must no-op all three tables: {before} {after}"
+            )
+
+    build_once(root, build)
     return paths
 
 
@@ -693,28 +677,24 @@ def _ensure_maximpact(spark: SparkSession, sf_dir: str) -> str:
     plan term pruning WITHOUT touching any postings."""
     import json as _json
     import os
-    import shutil
 
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "search_maximpact")
-    done = os.path.join(root, "_BUILD_DONE")
     path = os.path.join(root, "term_ub")
-    if os.path.exists(done):
-        return path
-    t, consts_path = _ensure_search_index(spark, sf_dir)
-    with open(consts_path) as fh:
-        c = _json.load(fh)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    post = t.read(spark)
-    ub = post.groupBy("term").agg(
-        F.max("df").alias("df"),
-        F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("ub"),
-    )
-    ub.coalesce(1).write.mode("overwrite").parquet(path)
-    with open(done, "w"):
-        pass
+
+    def build() -> None:
+        t, consts_path = _ensure_search_index(spark, sf_dir)
+        with open(consts_path) as fh:
+            c = _json.load(fh)
+        post = t.read(spark)
+        ub = post.groupBy("term").agg(
+            F.max("df").alias("df"),
+            F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("ub"),
+        )
+        ub.coalesce(1).write.mode("overwrite").parquet(path)
+
+    build_once(root, build)
     return path
 
 
@@ -1366,29 +1346,25 @@ def _ensure_blockmax(spark: SparkSession, sf_dir: str) -> str:
     conservatively by the planner)."""
     import json as _json
     import os
-    import shutil
 
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "search_blockmax")
-    done = os.path.join(root, "_BUILD_DONE")
     path = os.path.join(root, "block_ub")
-    if os.path.exists(done):
-        return path
-    t, consts_path = _ensure_search_index(spark, sf_dir)
-    with open(consts_path) as fh:
-        c = _json.load(fh)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    bub = (
-        t.read(spark)
-        .withColumn("grp", _grp_col())
-        .groupBy("grp", "term")
-        .agg(F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("bub"))
-    )
-    bub.coalesce(1).write.mode("overwrite").parquet(path)
-    with open(done, "w"):
-        pass
+
+    def build() -> None:
+        t, consts_path = _ensure_search_index(spark, sf_dir)
+        with open(consts_path) as fh:
+            c = _json.load(fh)
+        bub = (
+            t.read(spark)
+            .withColumn("grp", _grp_col())
+            .groupBy("grp", "term")
+            .agg(F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("bub"))
+        )
+        bub.coalesce(1).write.mode("overwrite").parquet(path)
+
+    build_once(root, build)
     return path
 
 

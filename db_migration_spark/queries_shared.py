@@ -1,15 +1,112 @@
 """Shared query-building helpers and oracle CTE fragments used by more
-than one queries_* module — a LEAF module (imports only operators), so
-family modules can import it without touching the registry's import
-cycle."""
+than one queries_* module — a LEAF module (imports only operators and
+the txlog table), so family modules can import it without touching the
+registry's import cycle.
+
+It also holds the one fixture protocol every persisted store a declared
+query serves from goes through (the idempotent-step rule: a completed
+step's output turns the re-run into an existence check):
+
+* ``build_once(root, build)`` — the ``_BUILD_DONE`` marker under
+  ``root`` means the store is complete, and the call returns at once.
+  Without it the root is removed and re-created empty (a partial build
+  is never resumed, it is rebuilt from scratch), ``build()`` runs, and
+  the marker is written last.  If ``build`` raises — its own replay or
+  exactness check included — the root is removed before the error
+  propagates, so a failed build is never cached as a finished fixture.
+* ``drain(writer, timeout_s)`` — start a stream with
+  ``trigger(availableNow=True)`` and wait up to ``timeout_s`` seconds.
+  A drain that does not finish in time is stopped and raises: a
+  partly drained sink is never read as the answer.
+* ``fold_mv(...)`` — an exactly-once materialized view: every
+  micro-batch's partial is folded into a ``TxTable.merge`` under the
+  txn identity ``(app, batch_id)``; after the drain batch 0 is replayed
+  with the caller's deterministic slice, and a replay that commits is a
+  ``RuntimeError`` (a check, not an ``assert``, so ``python -O`` keeps
+  it)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from .catalog import load_table
 from .operators import eav
+from .plans.txlog import TxTable
+
+
+def build_once(root: str, build: Callable[[], None]) -> None:
+    """Run ``build`` unless ``root`` already holds a completed build."""
+    done = os.path.join(root, "_BUILD_DONE")
+    if os.path.exists(done):
+        return
+    shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(root)
+    try:
+        build()
+    except BaseException:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    with open(done, "w"):
+        pass
+
+
+def drain(writer: DataStreamWriter, timeout_s: float) -> None:
+    """Run ``writer`` to completion under ``availableNow``; stop it and
+    raise if it is still running after ``timeout_s`` seconds."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise RuntimeError(
+            f"availableNow drain {q.name or q.id} did not finish in "
+            f"{timeout_s}s"
+        )
+
+
+Fold = Callable[[DataFrame], DataFrame]
+
+
+def fold_mv(
+    spark: SparkSession, root: str, stream: Callable[[], DataFrame],
+    partial: Fold, combine: Fold, app: str, replay: Callable[[], DataFrame],
+) -> TxTable:
+    """Build-once exactly-once MV at ``root``: each micro-batch of
+    ``stream()`` contributes ``partial(batch)``, folded into the stored
+    view as ``combine(view ∪ partial)``; ``replay()`` is the batch-side
+    slice re-delivered as batch 0, which must not commit.  Both inputs
+    are built only when the view is, so a completed view costs one
+    marker check."""
+
+    def refresh(bdf: DataFrame, batch_id: int) -> None:
+        part = partial(bdf)
+
+        def fold(current: DataFrame | None) -> DataFrame:
+            if current is None:
+                return part
+            return combine(current.unionByName(part))
+
+        TxTable(root).merge(bdf.sparkSession, fold, txn=(app, batch_id))
+
+    def build() -> None:
+        chk = os.path.join(root, "_chk")
+        drain(stream().writeStream.foreachBatch(refresh).option(
+            "checkpointLocation", chk), 300)
+        t = TxTable(root)
+        before = t.latest_version()
+        slice0 = replay()
+        t.merge(spark, lambda _current: partial(slice0), txn=(app, 0))
+        if t.latest_version() != before:
+            raise RuntimeError(
+                f"replayed {app} batch 0 must not commit (txn dedup broke)"
+            )
+
+    build_once(root, build)
+    return TxTable(root)
 
 
 _MELT_ATTRS = ["l_quantity", "l_returnflag", "l_linestatus", "l_shipdate"]

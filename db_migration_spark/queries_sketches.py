@@ -343,6 +343,29 @@ CROSS JOIN (SELECT COUNT(DISTINCT user_id) AS exact_users FROM events) x
 """
 
 
+def _events_mv(
+    spark: SparkSession, sf_dir: str, name: str, cols: list, partial,
+    combine, app: str,
+):
+    """``fold_mv`` over the ``cols`` projection of the events stream
+    (queries_shared.py): the MVs below differ only in their partial
+    and combine; each replays the deterministic ``event_id < 500``
+    slice as batch 0 after the drain (must be a txn no-op)."""
+    from .queries_e2e import _fx
+    from .queries_shared import fold_mv
+    from .queries_streaming import _events_stream
+
+    def replay() -> DataFrame:
+        events = load_table(spark, sf_dir, "events")
+        return events.filter(F.col("event_id") < 500).select(*cols)
+
+    return fold_mv(
+        spark, _fx(sf_dir, name),
+        lambda: _events_stream(spark, sf_dir).select(*cols),
+        partial, combine, app, replay,
+    )
+
+
 def _ensure_stream_hll_mv(spark: SparkSession, sf_dir: str):
     """Streaming distinct-count materialized view: each micro-batch
     shreds its rows to (event_type, j, r) registers and folds them into
@@ -350,67 +373,17 @@ def _ensure_stream_hll_mv(spark: SparkSession, sf_dir: str):
     per-batch txn identity — the incremental-MV refresh shape.  Because
     register MAX is associative, the MV after any number of batches
     equals a full-rescan register build — which is exactly what the
-    declared query's oracle computes.  Batch 0 is adversarially
-    replayed after the drain (must be a txn no-op).
+    declared query's oracle computes.
 
     At 100 TB: the per-batch work is one map-side-combinable aggregate
     over the batch plus a rewrite of an m×dims-row table (KBs); raw
     data is never re-read."""
-    import os
-    import shutil
-
-    from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
-
-    root = _fx(sf_dir, "txlog_stream_hll_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select("event_type", "user_id")
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(bdf, ["event_type"], "user_id")
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return regs
-            return hll_merge(current.unionByName(regs), ["event_type"])
-
-        mv.merge(bdf.sparkSession, fold, txn=("hll_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _events_mv(
+        spark, sf_dir, "txlog_stream_hll_mv", ["event_type", "user_id"],
+        lambda df: hll_registers(df, ["event_type"], "user_id"),
+        lambda df: hll_merge(df, ["event_type"]),
+        "hll_mv",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("hll mv stream drain did not finish")
-    # adversarial replay: batch 0's identity is already in the log
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select("event_type", "user_id")
-    )
-
-    def clobber(current):
-        return hll_registers(replay, ["event_type"], "user_id")
-
-    t.merge(spark, clobber, txn=("hll_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_hll_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -821,68 +794,16 @@ def _ensure_stream_theta_mv(spark: SparkSession, sf_dir: str):
     after any number of batches equals a full-rescan sketch — exactly
     what the declared query's oracle computes, so the digest gate
     certifies BOTH the incremental maintenance and exactly-once
-    delivery.  Batch 0 is adversarially replayed after the drain (must
-    be a txn no-op).  At 100 TB: per-batch work is one bounded sketch
-    build over the batch plus a rewrite of a ≤ k×dims-row table."""
-    import os
-    import shutil
-
+    delivery.  At 100 TB: per-batch work is one bounded sketch build
+    over the batch plus a rewrite of a ≤ k×dims-row table."""
     from .functions.theta import kmv_merge, kmv_sketch
-    from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
 
-    root = _fx(sf_dir, "txlog_stream_theta_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select("event_type", "user_id")
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketch(bdf, ["event_type"], "user_id", _THETA_MV_K)
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return sk
-            return kmv_merge(
-                current.unionByName(sk), ["event_type"], _THETA_MV_K
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("theta_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _events_mv(
+        spark, sf_dir, "txlog_stream_theta_mv", ["event_type", "user_id"],
+        lambda df: kmv_sketch(df, ["event_type"], "user_id", _THETA_MV_K),
+        lambda df: kmv_merge(df, ["event_type"], _THETA_MV_K),
+        "theta_mv",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("theta mv stream drain did not finish")
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select("event_type", "user_id")
-    )
-
-    def clobber(current):
-        from .functions.theta import kmv_sketch as _sk
-
-        return _sk(replay, ["event_type"], "user_id", _THETA_MV_K)
-
-    t.merge(spark, clobber, txn=("theta_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_theta_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1157,80 +1078,23 @@ def _ensure_stream_quantile_mv(spark: SparkSession, sf_dir: str):
     (event_type, bin, cnt) table into a txlog MV via the serializable
     ``merge`` primitive with a per-batch txn identity.  Count-SUM is
     associative, so the MV after any number of batches equals a
-    full-rescan bin build — the oracle's exact recomputation.  Batch 0
-    is adversarially replayed after the drain (must be a txn no-op).
+    full-rescan bin build — the oracle's exact recomputation.
 
     At 100 TB: per-batch work is one map-side-combinable aggregate
     over the batch plus a rewrite of a <= dims x 416-row table (KBs);
     raw data is never re-read."""
-    import os
-    import shutil
-
     from .functions.qsketch import logbin_merge, logbin_table
-    from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
 
-    root = _fx(sf_dir, "txlog_stream_quantile_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-
-    def _cents(df: DataFrame) -> DataFrame:
-        return df.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-
-    events = _events_stream(spark, sf_dir).select("event_type", "value")
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        bins = logbin_table(_cents(bdf), ["event_type"], "cents")
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return bins
-            return logbin_merge(
-                current.unionByName(bins), ["event_type"]
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("qsk_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    return _events_mv(
+        spark, sf_dir, "txlog_stream_quantile_mv", ["event_type", "value"],
+        lambda df: logbin_table(
+            df.select("event_type", cents.alias("cents")), ["event_type"],
+            "cents",
+        ),
+        lambda df: logbin_merge(df, ["event_type"]),
+        "qsk_mv",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("quantile mv stream drain did not finish")
-    before = t.latest_version()
-    replay = _cents(
-        load_table(spark, sf_dir, "events").filter(
-            F.col("event_id") < 500  # deterministic replay slice
-        )
-    )
-
-    def clobber(current):
-        from .functions.qsketch import logbin_table as _lt
-
-        return _lt(replay, ["event_type"], "cents")
-
-    t.merge(spark, clobber, txn=("qsk_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_quantile_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1588,72 +1452,17 @@ def _ensure_stream_priority_mv(spark: SparkSession, sf_dir: str):
     full-rescan sample — the digest equality the declared query's
     oracle certifies, which simultaneously proves exactly-once
     delivery (a dropped or doubled batch changes the retained set).
-    Batch 0 is adversarially replayed after the drain (must be a txn
-    no-op).  At 100 TB: per-batch work is one salted top-(k+1) over
-    the batch plus a rewrite of a ≤ (k+1)×dims-row table."""
-    import os
-    import shutil
-
+    At 100 TB: per-batch work is one salted top-(k+1) over the batch
+    plus a rewrite of a ≤ (k+1)×dims-row table."""
     from .functions.theta import priority_merge, priority_sample
-    from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
 
-    root = _fx(sf_dir, "txlog_stream_priority_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select(
-        F.col("event_type").alias("seg"), "event_id", "value"
+    return _events_mv(
+        spark, sf_dir, "txlog_stream_priority_mv",
+        [F.col("event_type").alias("seg"), "event_id", "value"],
+        lambda df: priority_sample(df, ["seg"], "event_id", "value", k=_PRIO_MV_K),
+        lambda df: priority_merge(df, ["seg"], _PRIO_MV_K),
+        "priority_mv",
     )
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        sk = priority_sample(bdf, ["seg"], "event_id", "value", k=_PRIO_MV_K)
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return sk
-            return priority_merge(
-                current.unionByName(sk), ["seg"], _PRIO_MV_K
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("priority_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("priority mv stream drain did not finish")
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select(
-            F.col("event_type").alias("seg"), "event_id", "value"
-        )
-    )
-
-    def clobber(current):
-        from .functions.theta import priority_sample as _ps
-
-        return _ps(replay, ["seg"], "event_id", "value", k=_PRIO_MV_K)
-
-    t.merge(spark, clobber, txn=("priority_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_priority_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1764,78 +1573,23 @@ def _ensure_stream_bottomk_mv(spark: SparkSession, sf_dir: str):
     any number of batches equals a direct full-rescan sample — the
     digest equality the declared query's oracle certifies, which
     simultaneously proves exactly-once delivery (a dropped or doubled
-    batch changes the retained set).  Batch 0 is adversarially
-    replayed after the drain (must be a txn no-op).  At 100 TB:
-    per-batch work is one salted bottom-k over the batch plus a
-    rewrite of a ≤ k×dims-row table."""
-    import os
-    import shutil
-
+    batch changes the retained set).  At 100 TB: per-batch work is one
+    salted bottom-k over the batch plus a rewrite of a ≤ k×dims-row
+    table."""
     from .functions.theta import bottomk_merge, bottomk_sample
-    from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
 
-    root = _fx(sf_dir, "txlog_stream_bottomk_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
     cents = F.floor(
         F.col("value").cast("double") * F.lit(100.0) + F.lit(0.5)
     ).cast("bigint")
-    events = _events_stream(spark, sf_dir).select(
-        F.col("event_type").alias("seg"), "event_id", cents.alias("cents")
+    return _events_mv(
+        spark, sf_dir, "txlog_stream_bottomk_mv",
+        [F.col("event_type").alias("seg"), "event_id", cents.alias("cents")],
+        lambda df: bottomk_sample(
+            df, ["seg"], "event_id", payload=("cents",), k=_BK_MV_K
+        ),
+        lambda df: bottomk_merge(df, ["seg"], _BK_MV_K),
+        "bottomk_mv",
     )
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        sk = bottomk_sample(
-            bdf, ["seg"], "event_id", payload=("cents",), k=_BK_MV_K
-        )
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return sk
-            return bottomk_merge(
-                current.unionByName(sk), ["seg"], _BK_MV_K
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("bottomk_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("bottomk mv stream drain did not finish")
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select(
-            F.col("event_type").alias("seg"), "event_id", cents.alias("cents")
-        )
-    )
-
-    def clobber(current):
-        from .functions.theta import bottomk_sample as _bs
-
-        return _bs(replay, ["seg"], "event_id", payload=("cents",), k=_BK_MV_K)
-
-    t.merge(spark, clobber, txn=("bottomk_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_bottomk_mv(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .queries_shared import build_once, drain
 from .streaming import import_stream as ST
 
 
@@ -58,14 +59,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drain(df: DataFrame, name: str, mode: str) -> None:
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        df.writeStream.format("memory").queryName(name).outputMode(mode),
+        300,
     )
-    q.awaitTermination(300)
 
 
 def _sink_name(prefix: str, sf_dir: str) -> str:
@@ -527,15 +524,13 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = f"/tmp/dbm_spark_ckpt/stream_merge_{_re.sub(r'[^A-Za-z0-9]', '_', sf_dir)}"
     shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
+    drain(
         _events_stream(spark, sf_dir)
         .filter(F.col("event_id") >= cut)
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        300,
     )
-    q.awaitTermination(300)
     final = SNAP.read_snapshot(spark, root)
     return (
         final.groupBy("a")
@@ -764,7 +759,6 @@ def q_ace_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile from the live events table, so a serializer escape bug, a
     dropped partition, or a batch collision all shift the counts."""
     import os
-    import shutil
     import tempfile
 
     from .sources import ace_datasource
@@ -776,10 +770,8 @@ def q_ace_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.basename(sf_dir.rstrip("/")),
     )
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    marker = os.path.join(base, "_DONE")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+
+    def build() -> None:
         recs = _events_stream(spark, sf_dir).select(
             F.lit("Event").alias("class"),
             F.concat(F.lit("E"), F.col("event_id")).alias("obj_id"),
@@ -789,21 +781,14 @@ def q_ace_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("string").alias("comment"),
             F.lit("stream").alias("src"),
         )
-        q = (
+        drain(
             recs.writeStream.format("ace")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            300,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "ace stream sink drain timed out — refusing to cache a "
-                "truncated fixture"
-            )
-        with open(marker, "w"):
-            pass
+
+    build_once(base, build)
     back = spark.read.format("ace").load(out)
     return (
         back.groupBy(F.col("value").alias("event_type"))

@@ -25,6 +25,9 @@ Member "G1" -O "2010-01-04_10:00:00"
 
 PATCH = '''Gene : "G1"
 Identity "g-one-renamed" -O "2011-01-01_10:00:00"
+
+Protein : "P1"
+Mass "99.25" -O "2011-01-02_10:00:00"
 '''
 
 MODELS = """?Gene
@@ -32,6 +35,7 @@ MODELS = """?Gene
   Score Float
 ?Protein
   Peptide UNIQUE Text
+  Mass UNIQUE Float
 ?Homology_group
   Member Text
 """
@@ -65,9 +69,12 @@ def job(spark, tmp_path_factory):
 def test_store_is_typed_and_tx_sorted(spark, job):
     store = spark.read.parquet(job._path("datoms_patched"))
     rows = store.collect()
-    assert len(rows) == 5
+    assert len(rows) == 6
     score = [r for r in rows if r["a"] == "Gene/Score"][0]
     assert score["v_double"] == 3.5
+    # a patched typed value is typed like one from the base dump
+    mass = [r for r in rows if r["a"] == "Protein/Mass"]
+    assert [(r["v"], r["v_double"]) for r in mass] == [("99.25", 99.25)]
 
 
 def test_patch_won(spark, job):
@@ -95,7 +102,7 @@ def test_homology_store(spark, job):
 
 def test_backup_and_resume(spark, job):
     backup = spark.read.parquet(job._path("backup"))
-    assert backup.count() == 5
+    assert backup.count() == 6
     # manifest says all 7 steps done; re-running is a no-op (cursor at end)
     p = job.pipeline()
     state = p._load()
